@@ -54,22 +54,34 @@ object Bench {
     // different queries in different passes and the per-query median
     // rejects it. Tune passes via SPARK_GRAFT_PASSES for local iteration.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+    // A query that throws in any pass is no sample at all: the time it
+    // took to fail would read as a fast query. It is named on stderr and
+    // in the full line's "failed" array, and kept out of the total.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val samples = (1 to passes).map { _ =>
-      ordered.map { case (name, fn) =>
+      ordered.flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).count()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"bench: $name FAILED: $e")
+          failed += name
+          None
+        }
       }.toMap
     }
-    val results = ordered.map { case (name, _) =>
+    val results = ordered.collect { case (name, _) if !failed(name) =>
       val times = samples.map(_(name)).sorted
       name -> times(times.length / 2)
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""failed":$failedJson,"sf":"$sfDir"}"""
     println(fullLine)
     // Short total-only line LAST: the per-query line above exceeds a
     // tail-capture's buffer at 100+ queries, truncating its leading

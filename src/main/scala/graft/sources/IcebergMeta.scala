@@ -1273,16 +1273,14 @@ object IcebergMeta {
       operation: String, schemaId: Int, manifestList: String,
       deletedDataFiles: Long = 0L)
 
-  // (root, hint value, file mtime, file size) → parsed metadata; a
-  // tailing stream's per-trigger snapshots() costs one hint read + two
-  // stats after the first parse of each chain version. MTIME + SIZE in
-  // the key make the cache correct under snapshot expiry, which
-  // rewrites the current metadata file IN PLACE — mtime granularity can
-  // be a millisecond or coarser, and expiry always changes the byte
-  // length (it removes snapshot entries), so the size component closes
-  // the same-millisecond rewrite window a bare-mtime key leaves open.
+  // (root, hint value, file stamp) → parsed metadata; a tailing
+  // stream's per-trigger snapshots() costs one hint read + one file read
+  // and hash after the first parse of each chain version. The stamp
+  // covers the file's CONTENT, which keeps the cache correct under
+  // snapshot expiry: it rewrites the current metadata file IN PLACE, and
+  // a same-size rewrite within one mtime tick keeps size and mtime.
   private val metadataCache = TrieMap
-    .empty[(String, Long, Long, Long), com.fasterxml.jackson.databind.JsonNode]
+    .empty[(String, Long, String), com.fasterxml.jackson.databind.JsonNode]
 
   /** Read-plane format-version gate — the Iceberg twin of the Delta
     * face's `requireDeltaReaderProtocol`. A non-v2 chain read under v2
@@ -1321,21 +1319,27 @@ object IcebergMeta {
     }
   }
 
-  /** The cached parse WITHOUT the format-version gate — only for
-    * callers that must LOOK at a possibly-foreign tip to classify it
-    * (the export guard); every read entry goes through
-    * [[currentMetadata]], which gates. */
-  private def currentMetadataUngated(root: String)
-      : com.fasterxml.jackson.databind.JsonNode = {
+  /** The current metadata file per the version hint: (hint value, file,
+    * [[FileStamp]]) — the chain state [[currentMetadataUngated]] parses
+    * and the [[readIceberg]] memo keys on. */
+  private def currentMetadataFile(root: String): (Long, Path, String) = {
     val dir = metaDir(root)
     val hint = dir.resolve("version-hint.text")
     require(Files.exists(hint),
       s"no Iceberg metadata at $root (exportIcebergMeta first)")
     val n = Files.readString(hint).trim.toLong
     val f = dir.resolve(s"v$n.metadata.json")
-    val mt = Files.getLastModifiedTime(f).toMillis
-    val sz = Files.size(f)
-    metadataCache.getOrElseUpdate((root, n, mt, sz),
+    (n, f, FileStamp.of(f))
+  }
+
+  /** The cached parse WITHOUT the format-version gate — only for
+    * callers that must LOOK at a possibly-foreign tip to classify it
+    * (the export guard); every read entry goes through
+    * [[currentMetadata]], which gates. */
+  private def currentMetadataUngated(root: String)
+      : com.fasterxml.jackson.databind.JsonNode = {
+    val (n, f, stamp) = currentMetadataFile(root)
+    metadataCache.getOrElseUpdate((root, n, stamp),
       mapper.readTree(Files.readString(f)))
   }
 
@@ -5325,71 +5329,37 @@ object IcebergMeta {
       if (hasIdentity) noSeq else noSeq.drop("__p")
     }
 
+  /** Constructed-read memo: building the read DataFrame is pure driver
+    * work — metadata walk, manifest planning, delete wiring, schema
+    * alignment — measured at 0.1–0.44 s per call, repeated identically
+    * on every invocation over an UNCHANGED chain. The plan is a pure
+    * function of (chain state, read arguments, cbo arm), and the chain
+    * state is fully pinned by the current metadata file's (version,
+    * stamp) — every commit, rollback, or maintenance verb
+    * rewrites that file, so a write invalidates the key the same way it
+    * already invalidates [[metadataCache]]. Only the ANALYZED PLAN is
+    * memoized (in [[SessionMemo]], the Tables.load rule): every action
+    * still scans the parquet. Refusals (reader-version gate, missing
+    * snapshot) throw before anything is cached. */
+  private def metadataIdentity(root: String): String = {
+    val (n, _, stamp) = currentMetadataFile(root)
+    s"$n:$stamp"
+  }
+
   /** Read the table THROUGH the Iceberg chain only — version-hint →
     * metadata.json → (current or pinned) snapshot → manifest list →
     * manifests → live files, served under the metadata schema. The graft
     * manifest is deliberately not consulted: gating this against an
     * oracle gates the exported FORMAT. */
-  /** Constructed-read memo (optimization round 17): building the read
-    * DataFrame is pure driver work — metadata walk, manifest planning,
-    * delete wiring, schema alignment — measured at 0.1–0.44 s per call,
-    * repeated identically on every invocation over an UNCHANGED chain.
-    * The plan is a pure function of (chain state, read arguments,
-    * cbo arm), and the chain state is fully pinned by the current
-    * metadata file's (version, mtime, size) — every commit, rollback,
-    * or maintenance verb rewrites that file, so a write invalidates the
-    * key the same way it already invalidates [[metadataCache]]. Only
-    * the ANALYZED PLAN is memoized (catalog semantics, the
-    * Tables.load rule): every action still scans the parquet.
-    * Refusals (reader-version gate, missing snapshot) throw before
-    * anything is cached. Weakly keyed on the session so stopped
-    * sessions collect. */
-  private val readMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  private def metadataIdentity(root: String): String = {
-    val dir = metaDir(root)
-    val hint = dir.resolve("version-hint.text")
-    require(Files.exists(hint),
-      s"no Iceberg metadata at $root (exportIcebergMeta first)")
-    val n = Files.readString(hint).trim.toLong
-    val f = dir.resolve(s"v$n.metadata.json")
-    s"$n:${Files.getLastModifiedTime(f).toMillis}:${Files.size(f)}"
-  }
-
   def readIceberg(spark: SparkSession, root: String,
       snapshotAsOf: Option[Long] = None,
       asOfTimestamp: Option[Long] = None,
-      pruneWhere: Option[String] = None): DataFrame = {
-    val m = readMemo.synchronized {
-      var inner = readMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readMemo.put(spark, inner)
-      }
-      inner
+      pruneWhere: Option[String] = None): DataFrame =
+    SessionMemo(spark, "iceberg", s"$root@${metadataIdentity(root)}" +
+        s"@$snapshotAsOf@$asOfTimestamp@$pruneWhere" +
+        s"@${spark.conf.get("spark.sql.cbo.enabled", "false")}") {
+      readIcebergUncached(spark, root, snapshotAsOf, asOfTimestamp, pruneWhere)
     }
-    val cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val key = s"$root@${metadataIdentity(root)}" +
-      s"@$snapshotAsOf@$asOfTimestamp@$pruneWhere@$cbo"
-    // stale-version keys accumulate in a long writer session (every
-    // commit mints a new identity) — cap and reset rather than leak
-    // (the r15 ckptTxnCache lesson); a reset only costs one rebuild.
-    // get/putIfAbsent, NOT computeIfAbsent: a memoized builder can call
-    // back into this map (icebergChangelog's legs read the chain) and a
-    // nested computeIfAbsent on one ConcurrentHashMap throws
-    // "Recursive update"; a racy duplicate build is benign.
-    if (m.size > 256) m.clear()
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built =
-        readIcebergUncached(spark, root, snapshotAsOf, asOfTimestamp, pruneWhere)
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
 
   private def readIcebergUncached(spark: SparkSession, root: String,
       snapshotAsOf: Option[Long],
@@ -5936,30 +5906,13 @@ object IcebergMeta {
     * named by the position diff, and the keyed join shuffles only the
     * rewritten files' rows. */
   def icebergChangelog(spark: SparkSession, root: String,
-      fromSeq: Long, toSeq: Long, keys: Seq[String]): DataFrame = {
+      fromSeq: Long, toSeq: Long, keys: Seq[String]): DataFrame =
     // constructed-plan memo, the [[readIceberg]] rule: the changelog
     // plan is a pure function of the pinned chain state + arguments
-    val m = readMemo.synchronized {
-      var inner = readMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readMemo.put(spark, inner)
-      }
-      inner
+    SessionMemo(spark, "changelog", s"$root@${metadataIdentity(root)}" +
+        s"@$fromSeq@$toSeq@${keys.mkString(",")}") {
+      icebergChangelogUncached(spark, root, fromSeq, toSeq, keys)
     }
-    if (m.size > 256) m.clear()
-    val key = s"changelog@$root@${metadataIdentity(root)}" +
-      s"@$fromSeq@$toSeq@${keys.mkString(",")}"
-    // get/putIfAbsent, not computeIfAbsent: the builder reads the chain
-    // through readIceberg, which updates this same map (see there)
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built = icebergChangelogUncached(spark, root, fromSeq, toSeq, keys)
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
 
   private def icebergChangelogUncached(spark: SparkSession, root: String,
       fromSeq: Long, toSeq: Long, keys: Seq[String]): DataFrame = {

@@ -938,12 +938,9 @@ object LakehouseTable {
       // _graft_stats.json, armed by the cbo conf) — both must key the
       // memo or a stale no-stats/stale-stats plan would be served
       val statsF = Paths.get(root, "_graft_stats.json")
-      val statsId =
-        if (Files.exists(statsF))
-          s"${Files.size(statsF)}:${Files.getLastModifiedTime(statsF).toMillis}"
-        else "none"
+      val statsId = if (Files.exists(statsF)) FileStamp.of(statsF) else "none"
       val cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-      memoizedRead(spark, s"native@$root@${dirIdentity(manifestDir(root))}" +
+      SessionMemo(spark, "native", s"$root@${FileStamp.ofDir(manifestDir(root))}" +
           s"@$version@$statsId@$cbo") {
         readUncached(spark, root, version)
       }
@@ -2532,77 +2529,35 @@ object LakehouseTable {
     deleted.result()
   }
 
+  /** Constructed-read memo rule for the Delta export faces (the
+    * IcebergMeta.readIceberg twin): building the read DataFrame — log
+    * replay to a state, DV wiring, schema derivation, slice
+    * construction — is pure driver work repeated identically per call
+    * over an UNCHANGED log. The plan is a pure function of (log state,
+    * arguments, cbo arm), and the log state is pinned by the stamp of
+    * the whole `_delta_log` listing (a commit appends a json, a
+    * checkpoint rewrites `_last_checkpoint`, log cleanup deletes tails;
+    * each changes the stamp). Only the ANALYZED PLAN is memoized (in
+    * [[SessionMemo]]); every action still scans the parquet. Refusals
+    * throw before caching. */
+  private def deltaLogIdentity(root: String): String = {
+    val logDir = Paths.get(root, "_delta_log")
+    require(Files.isDirectory(logDir), s"no _delta_log at $root")
+    FileStamp.ofDir(logDir)
+  }
+
   /** Read a table THROUGH an exported Delta log only — the graft manifest
     * is deliberately not consulted: replay add/remove actions across the
     * log in version order and scan exactly the surviving files. This is
     * what any foreign Delta reader does with the export, so gating its
     * result against an oracle gates the exported FORMAT's bookkeeping,
     * not the engine's own read path. */
-  /** Constructed-read memo for the Delta export faces (optimization
-    * round 17, the IcebergMeta.readIceberg twin): building the read
-    * DataFrame — log replay to a state, DV wiring, schema derivation,
-    * slice construction — is pure driver work repeated identically per
-    * call over an UNCHANGED log. The plan is a pure function of (log
-    * state, arguments, cbo arm), and the log state is pinned by the
-    * fingerprint of the whole `_delta_log` listing (name:size:mtime of
-    * every entry — a commit appends a json, a checkpoint rewrites
-    * `_last_checkpoint`, log cleanup deletes tails; each changes the
-    * fingerprint). Only the ANALYZED PLAN is memoized; every action
-    * still scans the parquet. Refusals throw before caching. */
-  private val exportReadMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  private def dirIdentity(dir: Path): String = {
-    require(Files.isDirectory(dir), s"no directory at $dir")
-    val sb = new StringBuilder
-    val listed = Files.list(dir)
-    try listed.sorted().forEach { p =>
-      sb.append(p.getFileName.toString).append(':')
-        .append(Files.size(p)).append(':')
-        .append(Files.getLastModifiedTime(p).toMillis).append(';')
-    } finally listed.close()
-    graft.plans.TextExpressions.md5Hex(sb.toString)
-  }
-
-  private def deltaLogIdentity(root: String): String = {
-    val logDir = Paths.get(root, "_delta_log")
-    require(Files.isDirectory(logDir), s"no _delta_log at $root")
-    dirIdentity(logDir)
-  }
-
-  private def memoizedRead(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    val m = exportReadMemo.synchronized {
-      var inner = exportReadMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        exportReadMemo.put(spark, inner)
-      }
-      inner
-    }
-    // stale-fingerprint keys accumulate in a long writer session — cap
-    // and reset rather than leak (a reset costs one rebuild).
-    // get/putIfAbsent, NOT computeIfAbsent: a memoized builder can call
-    // back into this map (changeFeed's legs call read()) and a nested
-    // computeIfAbsent on one ConcurrentHashMap throws "Recursive
-    // update"; a racy duplicate build is benign.
-    if (m.size > 256) m.clear()
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
   def readDeltaExport(spark: SparkSession, root: String,
       useCheckpoint: Boolean = true,
       versionAsOf: Option[Long] = None,
       timestampAsOf: Option[Long] = None,
       pruneWhere: Option[String] = None): DataFrame =
-    memoizedRead(spark, s"export@$root@${deltaLogIdentity(root)}" +
+    SessionMemo(spark, "export", s"$root@${deltaLogIdentity(root)}" +
         s"@$useCheckpoint@$versionAsOf@$timestampAsOf@$pruneWhere" +
         s"@${spark.conf.get("spark.sql.cbo.enabled", "false")}") {
       readDeltaExportUncached(spark, root, useCheckpoint, versionAsOf,
@@ -4250,7 +4205,7 @@ object LakehouseTable {
 
   def readDeltaExportChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame =
-    memoizedRead(spark, s"changes@$root@${deltaLogIdentity(root)}" +
+    SessionMemo(spark, "changes", s"$root@${deltaLogIdentity(root)}" +
         s"@$fromVersion@$toVersion") {
       readDeltaExportChangesUncached(spark, root, fromVersion, toVersion)
     }
@@ -5638,11 +5593,11 @@ object LakehouseTable {
   private def zorderLayout(snapshot: DataFrame, zCols: Seq[String],
       numFiles: Int, partitionBy: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
+    val key = zCols.map(c => c -> numericKey(snapshot, c).cast("double")).toMap
     val bounds = snapshot.agg(
-      min(snapshot(zCols.head).cast("double")),
-      (max(snapshot(zCols.head).cast("double")) +:
-        zCols.tail.flatMap(c => Seq(min(snapshot(c).cast("double")),
-          max(snapshot(c).cast("double"))))): _*).head()
+      min(key(zCols.head)),
+      (max(key(zCols.head)) +:
+        zCols.tail.flatMap(c => Seq(min(key(c)), max(key(c))))): _*).head()
     // bit positions go up to bits*nCols-1: cap at 63 TOTAL so the sign bit
     // is never set (a negative __z would sort first and break the curve)
     // and wider column sets shed precision instead of wrapping the shift
@@ -5656,7 +5611,7 @@ object LakehouseTable {
         else (bounds.getDouble(2 * i), bounds.getDouble(2 * i + 1))
       val span = if (mx > mn) mx - mn else 1.0
       least(lit((1L << bits) - 1), floor(
-        (coalesce(snapshot(c).cast("double"), lit(mn)) - lit(mn))
+        (coalesce(key(c), lit(mn)) - lit(mn))
           / lit(span) * lit(1 << bits).cast("double")))
         .cast("long")
     }
@@ -5672,6 +5627,18 @@ object LakehouseTable {
       .sortWithinPartitions(partitionBy.map(snapshot.col) :+ col("__z"): _*))
       .drop("__z")
   }
+
+  /** Column `c` of `df` as an order-preserving number: timestamps (both
+    * kinds) as epoch micros, anything else cast to double — the stats
+    * sidecar's convention, and the Z-order curve's input. */
+  private def numericKey(df: DataFrame, c: String): org.apache.spark.sql.Column =
+    df.select(df(c)).schema.head.dataType match {
+      case org.apache.spark.sql.types.TimestampType |
+           org.apache.spark.sql.types.TimestampNTZType =>
+        // NTZ → instant is UTC-pinned (session tz is UTC everywhere here)
+        org.apache.spark.sql.functions.unix_micros(df(c).cast("timestamp"))
+      case _ => df(c).cast("double")
+    }
 
   /** Run `body` (a write of a range-partitioned plan) under a
     * deterministic range-exchange sample. RangePartitioner seeds its
@@ -5987,16 +5954,9 @@ object LakehouseTable {
     // wrongly — the over-approximation a stats sidecar is allowed.
     val df = readFilesLogicalWithIdentity(spark, root, cur,
       readManifest(root, cur))
-    def asLongOrDouble(c: String) = df.schema(c).dataType match {
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType =>
-        // NTZ → instant is UTC-pinned (session tz is UTC everywhere here)
-        unix_micros(col(c).cast("timestamp"))
-      case _ => col(c).cast("double")
-    }
     val aggs = cols.flatMap(c => Seq(
-      min(asLongOrDouble(c)).cast("double").as(s"min_$c"),
-      max(asLongOrDouble(c)).cast("double").as(s"max_$c")))
+      min(numericKey(df, c)).cast("double").as(s"min_$c"),
+      max(numericKey(df, c)).cast("double").as(s"max_$c")))
     val rows = df
       .groupBy(col("__dv_rel")).agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -6320,7 +6280,7 @@ object LakehouseTable {
     // the native-face twin of the readDeltaExport memo: the diff plan is
     // a pure function of the two pinned manifests (+ mapping/DV state,
     // all under _manifest) — fingerprint the whole _manifest listing
-    memoizedRead(spark, s"cdf@$root@${dirIdentity(manifestDir(root))}" +
+    SessionMemo(spark, "cdf", s"$root@${FileStamp.ofDir(manifestDir(root))}" +
         s"@$fromVersion@$toVersion@${keys.mkString(",")}") {
       changeFeedUncached(spark, root, fromVersion, toVersion, keys)
     }

@@ -14,44 +14,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dedupes identical canonical plans — the leak is across dirs and
   * session lifetime, which is exactly what this registry scopes.)
   *
-  * Stopped sessions are retired explicitly on the next `of` call: weak
-  * keys would NOT work here, because the cached DataFrame values strongly
-  * reference their SparkSession — the entry would keep its own key alive
-  * forever.
+  * Entries live in the session's [[SessionMemo]], which retires a
+  * stopped session's entries (their cached blocks died with the
+  * executors; only the references linger).
   */
 object RelationCache {
-  private val perSession = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-
   /** The cached relation for (kind, dir), building + caching on first use.
     * `build` must be a pure plan constructor (no side effects). */
-  def of(s: SparkSession, kind: String, dir: String)(build: => DataFrame): DataFrame = {
-    // drop registrations of stopped sessions (their cached blocks died
-    // with the executors; only the references linger)
-    perSession.keySet.removeIf(sess => sess.sparkContext.isStopped)
-    val m = perSession.computeIfAbsent(
-      s, _ => scala.collection.mutable.Map.empty[String, DataFrame])
-    m.synchronized {
-      val full = s"$kind@$dir"
-      m.get(full) match {
-        case Some(df) => df
-        case None =>
-          // dir switch: retire the kind's previous relation before caching
-          // the new one, so storage memory holds one copy per kind
-          m.filterInPlace { case (k, df) =>
-            val stale = k.startsWith(kind + "@")
-            if (stale) df.unpersist(false)
-            !stale
-          }
-          val df = build
-          // a build that pre-materialized (e.g. the CC loop caching its
-          // converged result before releasing intermediates) arrives
-          // already persisted — don't double-register it
-          if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-            df.cache()
-          m.put(full, df)
-          df
-      }
+  def of(s: SparkSession, kind: String, dir: String)(build: => DataFrame): DataFrame =
+    SessionMemo(s, s"relation.$kind", dir) {
+      // dir switch: retire the kind's previous relation before caching
+      // the new one, so storage memory holds one copy per kind (and the
+      // kind's namespace never nears SessionMemo's reset size)
+      SessionMemo.clear(s, s"relation.$kind").foreach(_.unpersist(false))
+      val df = build
+      // a build that pre-materialized (e.g. the CC loop caching its
+      // converged result before releasing intermediates) arrives
+      // already persisted — don't double-register it
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        df.cache()
+      df
     }
-  }
 }

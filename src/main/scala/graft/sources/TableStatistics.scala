@@ -380,17 +380,19 @@ object TableStatistics {
     cache.remove(root)
   }
 
-  // (root → (mtime, parsed)) — the read path probes on every query
-  private val cache = TrieMap.empty[String, (Long, Option[TableStats])]
+  // (root → (file stamp, parsed)) — the read path probes on every
+  // query; the file is rewritten in place, so the stamp covers its
+  // content (see FileStamp)
+  private val cache = TrieMap.empty[String, (String, Option[TableStats])]
 
-  /** Parsed stats if present (cached by file mtime). */
+  /** Parsed stats if present (cached by file stamp). */
   def statsOf(root: String): Option[TableStats] = {
     val p = statsPath(root)
     if (!Files.exists(p)) None
     else {
-      val mt = Files.getLastModifiedTime(p).toMillis
+      val stamp = FileStamp.of(p)
       cache.get(root) match {
-        case Some((m, st)) if m == mt => st
+        case Some((m, st)) if m == stamp => st
         case _ =>
           val parsed = scala.util.Try {
             val n = mapper.readTree(Files.readString(p))
@@ -407,7 +409,7 @@ object TableStatistics {
             TableStats(n.get("version").asLong(), n.get("rowCount").asLong(),
               n.get("sizeInBytes").asLong(), cols)
           }.toOption
-          cache.put(root, (mt, parsed))
+          cache.put(root, (stamp, parsed))
           parsed
       }
     }

@@ -30,29 +30,16 @@ object Tables {
     * schema and file listing are catalog state; memoizing the analyzed
     * relation reproduces exactly that (and only that — no data, no
     * results, are cached; every action still scans the parquet). Keyed
-    * weakly on the session (a stopped session's relations must be
-    * collectable) and strongly on (dir, table) — a dir switch simply
-    * builds the other dir's entry alongside.
+    * on (dir, table) in the session's [[SessionMemo]] — a dir switch
+    * simply builds the other dir's entry alongside.
     *
     * The base tables are the driver-generated read-only inputs; engine
     * WRITE paths (lakehouse roots, fixture dirs) never route through
     * here, so the listing can never go stale mid-session. */
-  private val relationMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val m = relationMemo.synchronized {
-      var inner = relationMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        relationMemo.put(spark, inner)
-      }
-      inner
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo(spark, "tables", s"$dir/$name") {
+      spark.read.parquet(s"$dir/$name.parquet")
     }
-    m.computeIfAbsent(s"$dir/$name",
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

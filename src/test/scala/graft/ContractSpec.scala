@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract invariants for SparkEntry: the maps the correctness gate
@@ -42,6 +44,39 @@ class ContractSpec extends AnyFunSuite {
     assert(m.get.group(1).toInt == SparkEntry.queries.size,
       s"README says '${m.get.group(1)} named queries' but SparkEntry has " +
         s"${SparkEntry.queries.size} — update README.md")
+  }
+
+  /** A map type keyed by SparkSession (alone or leading a tuple) whose
+    * value type names DataFrame: the shape of a per-session plan memo. */
+  private val sessionFrameMap =
+    """(?s)\w*Map(?:\.empty)?\[\s*\(?\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*[,)][^\]]*?\bDataFrame\b""".r
+
+  test("the sessionFrameMap guard recognizes hand-rolled per-session memos") {
+    Seq(
+      """new java.util.WeakHashMap[SparkSession,
+        |  java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()""".stripMargin,
+      "new ConcurrentHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()",
+      "TrieMap.empty[(SparkSession, String), DataFrame]"
+    ).foreach(src => assert(sessionFrameMap.findFirstIn(src).isDefined, src))
+    Seq("new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()",
+      "Map[String, (SparkSession, String) => DataFrame]"
+    ).foreach(src => assert(sessionFrameMap.findFirstIn(src).isEmpty, src))
+  }
+
+  test("src/main holds DataFrames per session only in SessionMemo (no hand-rolled copy)") {
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "SessionMemo.scala"))
+    val copies = files.filterNot(_.getFileName.toString == "SessionMemo.scala")
+      .flatMap { f =>
+        sessionFrameMap.findFirstIn(java.nio.file.Files.readString(f))
+          .map(m => s"$f: ${m.replaceAll("\\s+", " ")}")
+      }
+    assert(copies.isEmpty, "per-session DataFrame maps outside " +
+      s"graft.sources.SessionMemo — route them through it: $copies")
   }
 
   test("query names follow the qNN_name convention with unique numbers") {

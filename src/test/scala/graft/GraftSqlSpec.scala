@@ -235,6 +235,22 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE sqlspec_zp")
   }
 
+  test("OPTIMIZE ZORDER BY a TIMESTAMP_NTZ column keeps the row multiset") {
+    val root = Files.createTempDirectory("graft_sql_zntz").toString + "/t"
+    spark.sql(s"""CREATE TABLE sqlspec_zntz USING graft LOCATION '$root' AS
+      SELECT id AS k, CASE WHEN id % 17 = 0 THEN NULL
+        ELSE CAST(timestamp_seconds(id * 3607) AS TIMESTAMP_NTZ) END AS ts_ntz
+      FROM range(0, 300, 1, 4)""")
+    assert(spark.table("sqlspec_zntz").schema("ts_ntz").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    def rows = spark.table("sqlspec_zntz").collect().map(_.toString).sorted.toSeq
+    val before = rows
+    val v = spark.sql("OPTIMIZE sqlspec_zntz ZORDER BY (ts_ntz, k)").head().getLong(0)
+    assert(v == LakehouseTable.versions(root).last && v > 0)
+    assert(rows == before)
+    spark.sql("DROP TABLE sqlspec_zntz")
+  }
+
   test("TIMESTAMP AS OF resolves by in-commit timestamp; DESCRIBE DETAIL reports the table") {
     val root = Files.createTempDirectory("graft_sql_ts").toString + "/t"
     graft.sources.Tables.registerAll(spark, sf)
